@@ -116,47 +116,6 @@ def _resolve_n_buckets(
     return n_buckets
 
 
-def components_store_presence_count(
-    spark: SparkSession,
-    store_path: str,
-    ids,
-    n_buckets: int | None = None,
-) -> int:
-    """cb-bucket-pruned count of label-store rows whose id is in ``ids``
-    — exactly the rows a :func:`components_store_retract` of the same
-    set removes (relabeling preserves row counts; only removals change
-    them), at DELTA cost: the store is read only at the id set's hash
-    buckets, never scanned whole. Missing store → 0 (checked BEFORE the
-    id set is materialized, so the no-op path costs nothing). A forget
-    sweep does not need this — components_store_retract_counted reports
-    the removed rows in one pass — but standalone audits ("is this id
-    still anywhere?") do."""
-    from arrowhouse_spark.operators.sampling import hash_bucket
-
-    if not _fs_dir_exists(spark, store_path):
-        return 0
-    if not isinstance(ids, DataFrame):
-        from arrowhouse_spark.sources.memory import one_block
-
-        ids = one_block(spark, [(int(i),) for i in ids], "id long")
-    ids = ids.select("id").distinct().localCheckpoint()
-    n_buckets = _resolve_n_buckets(spark, store_path, n_buckets)
-    vbuckets = [
-        r.cb
-        for r in ids.select(
-            hash_bucket("id", n_buckets, salt="cc").alias("cb")
-        )
-        .distinct()
-        .collect()
-    ]
-    return int(
-        spark.read.parquet(store_path)
-        .filter(F.col("cb").isin(vbuckets))
-        .join(gate_broadcast(ids), "id", "semi")
-        .count()
-    )
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -452,6 +411,7 @@ def components_incremental(
         .distinct()
         .localCheckpoint()
     )
+    twin = None  # the readable __bycomp twin, when this fold uses one
     if store is not None:
         # prune the id-bucketed store to the batch vertices' buckets before
         # the semi-join (<= n_buckets values, known driver-side)
@@ -471,7 +431,6 @@ def components_incremental(
             .localCheckpoint()
         )
         members_src = store
-        twin_ok = False
         if not comp_index:
             # a twin left behind by comp_index=True folds would go silently
             # STALE here and corrupt a later comp_index=True fold — refuse.
@@ -486,10 +445,20 @@ def components_incremental(
         # FS existence gate instead of a probe read (same WARN-noise and
         # per-fold head(1) job rationale as the store probe above);
         # a missing twin = adopting a twin-less store — full-scan this
-        # fold and the write below builds the twin
+        # fold and the write below builds the twin. A twin directory that
+        # exists but holds no readable layout (a crashed write left only
+        # _temporary) is absent too: the rebuild's overwrite replaces it.
         if comp_index and _fs_dir_exists(spark, twin_path):
-            twin = spark.read.parquet(twin_path)
-            twin_ok = True
+            from arrowhouse_spark.operators.similarity import (
+                _is_missing_store_error,
+            )
+
+            try:
+                twin = spark.read.parquet(twin_path)
+            except Exception as exc:  # noqa: BLE001 — classify, re-raise
+                if not _is_missing_store_error(exc):
+                    raise
+        if twin is not None:
             cbuckets = [
                 r.ccb
                 for r in acomps.select(
@@ -565,7 +534,7 @@ def components_incremental(
         )
     if comp_index:
         ccb = hash_bucket("component", n_buckets, salt="ccb").alias("ccb")
-        if store is not None and twin_ok:
+        if twin is not None:
             # touched ccb partitions = new positions of the delta rows ∪
             # OLD positions of every affected component (rows that merged
             # away must leave their old bucket when it is rewritten)

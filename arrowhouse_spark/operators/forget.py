@@ -36,10 +36,13 @@ construction: it IS the compacted state).
 
 from __future__ import annotations
 
+import functools
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from arrowhouse_spark.session import run_concurrently
 
 #: Manifest entry kinds → which per-store retraction runs.
 STORE_KINDS = ("band", "fingerprint", "ivf", "components", "scd2", "shard")
@@ -65,7 +68,6 @@ def forget_ids(
     spark: SparkSession,
     stores: Sequence[dict],
     ids,
-    parallelism: int = 4,
 ) -> DataFrame:
     """Apply the matching per-store retraction for every manifest entry
     and return the summary relation (store, kind, rows_removed).
@@ -101,18 +103,14 @@ def forget_ids(
     docstring for the non-atomicity window and the re-run recovery
     contract.
 
-    ``parallelism`` (round-12 verdict #7): per-store legs are submitted
-    from a driver thread pool (Spark schedules concurrent jobs from one
-    session fine), so independent stores' job waves overlap instead of
-    paying additive latency — the summary relation stays in MANIFEST
-    order regardless. Legs are only parallelized when every manifest
-    path is distinct (two entries naming the same store would break the
-    per-store single-writer contract — such manifests run sequentially);
-    ``parallelism=1`` forces the sequential order. A failed leg
-    surfaces after all submitted legs finish (first failure in manifest
-    order) — the same partial-sweep state as a sequential failure, with
-    the same re-run recovery. Kinds are validated BEFORE any store is
-    touched, so a malformed manifest never half-runs."""
+    Per-store legs run concurrently (session.py:run_concurrently) when
+    every manifest path is distinct, and in manifest order otherwise —
+    two entries naming one store would break its single-writer contract.
+    The summary stays in MANIFEST order either way, and a failed leg
+    surfaces after the others finish (first failure in manifest order),
+    leaving the same partial-sweep state the re-run recovers. Kinds are
+    validated BEFORE any store is touched, so a malformed manifest never
+    half-runs."""
     from arrowhouse_spark.operators.components import (
         components_store_retract_counted,
     )
@@ -174,23 +172,10 @@ def forget_ids(
             )
         return (path, kind, int(removed))
 
-    distinct_paths = len({e["path"] for e in entries}) == len(entries)
-    if parallelism > 1 and len(entries) > 1 and distinct_paths:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(
-            max_workers=min(parallelism, len(entries))
-        ) as pool:
-            futures = [pool.submit(_leg, e) for e in entries]
-            out, first_exc = [], None
-            for fut in futures:  # manifest order: summary AND first error
-                try:
-                    out.append(fut.result())
-                except Exception as exc:  # noqa: BLE001 — re-raised below
-                    if first_exc is None:
-                        first_exc = exc
-            if first_exc is not None:
-                raise first_exc
+    if len(entries) > 1 and len({e["path"] for e in entries}) == len(entries):
+        out = run_concurrently(
+            spark, *[functools.partial(_leg, e) for e in entries]
+        )
     else:
         out = [_leg(e) for e in entries]
     from arrowhouse_spark.sources.memory import one_block

@@ -147,7 +147,8 @@ def source_mixed_sample(
     """Materialize :func:`source_mixing_plan`: inside each weighted source,
     rows rank by (md5(salt‖key), key) — the deterministic, engine-
     independent order used across this module — and the top ``take_n``
-    survive. One shuffle keyed by source.
+    survive. One shuffle keyed by source. ``key`` identifies a row within
+    its source; the same key may appear in several sources.
 
     ``exact=True`` gives exact per-source counts but windows each source in
     one task — fine up to ~10⁷ rows per source, a hot-spot beyond. At
@@ -186,18 +187,23 @@ def _take_per_source(
     # bytes proportional to the KEY, not the row payload — text/token
     # columns previously rode the hashpartitioning(source) exchange into
     # ≤|sources| tasks and serialized the pipeline tail (~2 s single-task
-    # stages at sf0.1). The winners then attach back by key at normal
-    # join parallelism: decide with small rows, move big rows once
+    # stages at sf0.1). The winners then attach back by (key, source) at
+    # normal join parallelism: decide with small rows, move big rows once
     # (guide §8). Winner selection depends only on (source, md5, key),
-    # so the surviving set is unchanged.
+    # so the surviving set is unchanged. The source is part of the join
+    # key because one key may appear in several sources, and a win in one
+    # must not admit its row in another; ``key`` must be unique within a
+    # source.
     w = Window.partitionBy(source_col).orderBy(h, F.col(key))
     winners = (
         joined.select(key, source_col, "take_n")
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= F.col("take_n"))
-        .select(key)
+        .select(key, source_col)
     )
-    return joined.join(winners, key, "semi").drop("n_avail", "take_n")
+    return joined.join(winners, [key, source_col], "semi").drop(
+        "n_avail", "take_n"
+    )
 
 
 def temperature_mixing_plan(

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from arrowhouse_spark.operators.idgate import gate_broadcast
+from arrowhouse_spark.session import run_concurrently
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -1271,28 +1272,25 @@ def ivf_store_upsert(
     # Assign the batch against the frozen centroids BEFORE the delete: the
     # assignment reads only the validated batch + the broadcast centroid
     # matrix, never the postings, so its materializing collect can run
-    # concurrently with the delete leg's id-locate scan from a driver
-    # thread (guide §2.6 overlap) — only the two WRITES stay ordered
-    # (the delete's dynamic overwrite would wipe postings appended into a
-    # touched cell before it).
-    from concurrent.futures import ThreadPoolExecutor
-
+    # concurrently with the delete leg's id-locate scan (guide §2.6
+    # overlap) — only the two WRITES stay ordered: the append below runs
+    # after both have finished (the delete's dynamic overwrite would wipe
+    # postings appended into a touched cell before it).
     c = _ivf_store_centroids(spark, store_path, base=base)
     assigned = _assign_to_centroids(
         deduped, c, vec_col, round_dp=6
     ).localCheckpoint(eager=False)  # the touched collect materializes it
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        touched_fut = pool.submit(
-            lambda: [
-                r.centroid
-                for r in assigned.select("centroid").distinct().collect()
-            ]
-        )
-        ivf_store_delete(
+    touched, _ = run_concurrently(
+        spark,
+        lambda: [
+            r.centroid
+            for r in assigned.select("centroid").distinct().collect()
+        ],
+        lambda: ivf_store_delete(
             spark, store_path, deduped.select(id_col), id_col=id_col,
             base=base,
-        )
-        touched = touched_fut.result()
+        ),
+    )
     # After the delete leg NO batch id remains anywhere in the store
     # (delete tombstones exactly the batch's ids, and assigned's ids are
     # a subset of them), so the append contract's touched-cell
@@ -1357,25 +1355,20 @@ def _ivf_store_upsert_atomic(
     if fs.exists(nb):  # stale half-built dir from a crashed attempt
         fs.delete(nb, True)
     # the two staged writes land in DIFFERENT directories and both must
-    # simply complete before the pointer flip — submit the small
-    # centroids copy from a driver thread so it back-fills executors
-    # while the postings merge runs (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        cfut = pool.submit(
-            lambda: spark.read.parquet(base + "/centroids")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(new_base + "/centroids")
-        )
-        (
-            merged.repartition("centroid")
-            .write.mode("overwrite")
-            .partitionBy("centroid")
-            .parquet(new_base + "/postings")
-        )
-        cfut.result()
+    # simply complete before the pointer flip — run the small centroids
+    # copy beside the postings merge so it back-fills executors (guide
+    # §2.6); run_concurrently returns only after both have finished
+    run_concurrently(
+        spark,
+        lambda: spark.read.parquet(base + "/centroids")
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(new_base + "/centroids"),
+        lambda: merged.repartition("centroid")
+        .write.mode("overwrite")
+        .partitionBy("centroid")
+        .parquet(new_base + "/postings"),
+    )
 
     # PRE-flip dead-layout sweep (refit step 3a): anything that is
     # neither the live old_v nor the just-built new_v is provably dead

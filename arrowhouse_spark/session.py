@@ -8,7 +8,9 @@ SURVEY.md §7 Phase 6.
 from __future__ import annotations
 
 import os
+from typing import Any, Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 
@@ -86,3 +88,43 @@ def shuffle_parts(spark: SparkSession) -> int:
             return int(spark.sparkContext.defaultParallelism)
         except Exception:  # noqa: BLE001 — Spark Connect: no SparkContext
             return 200
+
+
+def run_concurrently(spark: SparkSession, *thunks: Callable[[], Any]) -> list:
+    """Run each thunk on its own driver thread and return their results in
+    argument order — the engine's one driver-concurrency mechanism (Spark
+    schedules concurrent jobs from one session fine, so independent job
+    waves overlap instead of paying additive latency).
+
+    Each thunk is wrapped by ``inheritable_thread_target(spark)`` HERE, in
+    the caller's thread, so its jobs carry the caller's job group, local
+    properties and tags: profiling, tracing and ``cancelJobGroup`` see
+    them. Every thunk runs to completion, even after another one fails;
+    then the first failure in ARGUMENT order is re-raised."""
+    import threading
+
+    results: list = [None] * len(thunks)
+    errors: list[BaseException | None] = [None] * len(thunks)
+
+    def slot(i: int, thunk: Callable[[], Any]) -> Callable[[], None]:
+        def run() -> None:
+            try:
+                results[i] = thunk()
+            except BaseException as exc:  # noqa: BLE001 — re-raised below
+                errors[i] = exc
+
+        # one wrap per thunk: each thread gets its own copy of the
+        # caller's local properties, which Spark mutates per query
+        return inheritable_thread_target(spark)(run)
+
+    threads = [
+        threading.Thread(target=slot(i, t)) for i, t in enumerate(thunks)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for exc in errors:
+        if exc is not None:
+            raise exc
+    return results

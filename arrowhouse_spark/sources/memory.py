@@ -58,7 +58,3 @@ def null_source(spark: SparkSession, schema: T.StructType) -> DataFrame:
     """Empty source with a header ≡ NullBlockInputStream."""
     return spark.createDataFrame([], schema)
 
-
-def null_sink(df: DataFrame) -> None:
-    """Discarding sink ≡ NullBlockOutputStream — executes the plan, drops rows."""
-    df.write.format("noop").mode("overwrite").save()

@@ -56,8 +56,3 @@ def load_tables(
             out[t] = spark.read.parquet(p)
     return out
 
-
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Sink ≡ IBlockOutputStream/copyNToOne (DataStreams/ParallelInputsSink.h:12-131):
-    N partitions write in parallel; Spark handles commit protocol."""
-    df.write.mode(mode).parquet(path)

@@ -271,16 +271,6 @@ def release_rel_caches() -> int:
     return n
 
 
-def _doc_token_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from arrowhouse_spark.operators.dedup import token_hash_relation
-
-    key = (spark.sparkContext.applicationId, sf_dir, "tok")
-    return _rel_cached(
-        key,
-        lambda: token_hash_relation(_t(spark, sf_dir, "documents")).persist(),
-    )
-
-
 # Domain guard for the DuckDB xxhash64 model (_dd_spark_xxh64_str_stages):
 # the SQL model hard-codes 3 8-byte rounds and ord()-as-byte, so it is only
 # valid for ASCII strings of ≤31 bytes. The documents fixture satisfies this

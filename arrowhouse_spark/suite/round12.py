@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arrowhouse_spark.session import shuffle_parts
+from arrowhouse_spark.session import run_concurrently, shuffle_parts
 from arrowhouse_spark.suite import (
     _events,
     _t,
@@ -119,10 +119,10 @@ def gdpr_forget_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard_store = d + "/shards"
     try:
         # the six stores build into six INDEPENDENT directories from
-        # independent scans — submit them from a driver thread pool so
-        # their job waves overlap (guide §2.6; the same overlap the
-        # sweep's own forget_ids legs already use). Builds are
-        # single-writer per path, so concurrency is safe by construction.
+        # independent scans — run them concurrently so their job waves
+        # overlap (guide §2.6; the same overlap the sweep's own forget_ids
+        # legs already use). Builds are single-writer per path, so
+        # concurrency is safe by construction.
         def _b_fp() -> None:
             dedup_incremental(
                 docs, spark.createDataFrame([], "fp string")
@@ -172,15 +172,9 @@ def gdpr_forget_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         def _b_shard() -> None:
             write_training_shards(docs, shard_store, n_shards=8)
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=6) as pool:
-            futs = [
-                pool.submit(b)
-                for b in (_b_fp, _b_band, _b_cc, _b_ivf, _b_scd2, _b_shard)
-            ]
-            for f in futs:
-                f.result()
+        run_concurrently(
+            spark, _b_fp, _b_band, _b_cc, _b_ivf, _b_scd2, _b_shard
+        )
 
         summary = forget_ids(
             spark,
@@ -193,7 +187,6 @@ def gdpr_forget_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {"path": shard_store, "kind": "shard"},
             ],
             victims,
-            parallelism=6,
         )
 
         def _left(df: DataFrame | None, col: str) -> int:
@@ -213,12 +206,14 @@ def gdpr_forget_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
         # the six audit counts are independent read-only jobs — overlap
         # them the same way as the builds
-        with ThreadPoolExecutor(max_workers=6) as pool:
-            left_futs = {
-                kind: pool.submit(lambda rd=rd, col=col: _left(rd(), col))
-                for kind, (rd, col) in left_specs.items()
-            }
-            left = {kind: f.result() for kind, f in left_futs.items()}
+        counts = run_concurrently(
+            spark,
+            *[
+                lambda rd=rd, col=col: _left(rd(), col)
+                for rd, col in left_specs.values()
+            ],
+        )
+        left = dict(zip(left_specs, counts))
         rows = sorted(
             (r.kind, int(r.rows_removed), int(left[r.kind]))
             for r in summary.collect()

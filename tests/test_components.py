@@ -228,6 +228,39 @@ def test_components_incremental_comp_index_parity_and_pruning(spark, tmp_path):
         )
 
 
+def test_components_incremental_rebuilds_unreadable_twin(spark, tmp_path):
+    """A crashed twin write can leave the __bycomp directory holding only
+    _temporary. The next comp_index=True fold treats that twin as absent:
+    it full-scans, succeeds, and rebuilds a twin row-identical to the
+    primary store."""
+    import shutil
+
+    from arrowhouse_spark.operators.components import components_incremental
+
+    store = str(tmp_path / "cct")
+    twin = tmp_path / "cct__bycomp"
+    ET = "src long, dst long"
+    components_incremental(
+        spark.createDataFrame([(1, 2), (10, 11)], ET), store, comp_index=True
+    )
+    shutil.rmtree(twin)
+    (twin / "_temporary" / "0").mkdir(parents=True)
+
+    components_incremental(
+        spark.createDataFrame([(2, 10)], ET), store, comp_index=True
+    )
+
+    def rows(path):
+        return {
+            (r.id, r.component)
+            for r in spark.read.parquet(path).select("id", "component").collect()
+        }
+
+    assert rows(store) == {(1, 1), (2, 1), (10, 1), (11, 1)}
+    assert rows(str(twin)) == rows(store)
+    assert not (twin / "_temporary").exists()
+
+
 def test_components_incremental_n_buckets_pinned(spark, tmp_path):
     """A fold with a different n_buckets than the store was built with
     would prune the wrong partitions and silently mislabel — the meta

@@ -1984,51 +1984,62 @@ def test_forget_ids_rerun_survives_components_full_drain(spark, tmp_path):
     )
 
 
-def test_forget_ids_parallel_matches_sequential(spark, tmp_path):
-    """Round-12 verdict #7: per-store legs run from a driver thread pool
-    by default; the summary relation is IDENTICAL to the sequential
-    order (manifest order, same counts), duplicate-path manifests fall
-    back to sequential (single-writer per store), and a failing leg
-    surfaces while the healthy legs still commit (the documented
-    partial-sweep state, healed by re-run)."""
+def _three_store_manifest(spark, tmp_path, tag):
+    """Band, fingerprint and IVF stores over ten documents, built under
+    ``tmp_path`` with ``tag`` in each path; returns the forget manifest."""
     from arrowhouse_spark.operators.dedup import dedup_incremental
-    from arrowhouse_spark.operators.forget import forget_ids
     from arrowhouse_spark.operators.similarity import ivf_store_init
 
     docs = spark.createDataFrame(
         [(i, f"doc {i} text") for i in range(10)], "doc_id long, text string"
     )
+    fp = str(tmp_path / f"fp_{tag}")
+    dedup_incremental(docs, spark.createDataFrame([], "fp string")) \
+        .write.parquet(fp)
+    band = str(tmp_path / f"band_{tag}")
+    spark.createDataFrame(
+        [(d, d * 31 + b, b, (d + b) % 5, d % 2)
+         for d in range(10) for b in range(4)],
+        "doc_id long, minhash long, band int, bucket long, batch_id int",
+    ).write.partitionBy("batch_id").parquet(band)
+    ivf = str(tmp_path / f"ivf_{tag}")
+    emb = spark.range(10).select(
+        F.col("id").alias("vec_id"),
+        F.transform(
+            F.sequence(F.lit(0), F.lit(5)),
+            lambda j: (
+                (F.pmod(F.xxhash64("id", j), F.lit(1001)) - F.lit(500))
+                / F.lit(500.0)
+            ).cast("double"),
+        ).alias("embedding"),
+    )
+    ivf_store_init(emb, ivf, n_centroids=3)
+    return [
+        {"path": band, "kind": "band"},
+        {"path": fp, "kind": "fingerprint"},
+        {"path": ivf, "kind": "ivf"},
+    ]
+
+
+def test_forget_ids_parallel_matches_sequential(spark, tmp_path):
+    """Round-12 verdict #7: per-store legs of a distinct-path manifest run
+    concurrently; the summary relation is IDENTICAL to running each entry
+    on its own (single-entry calls take the in-order path: manifest
+    order, same counts), duplicate-path manifests fall back to
+    sequential (single-writer per store), and a failing leg surfaces
+    while the healthy legs still commit (the documented partial-sweep
+    state, healed by re-run)."""
+    from arrowhouse_spark.operators.forget import forget_ids
 
     def build(tag):
-        fp = str(tmp_path / f"fp_{tag}")
-        dedup_incremental(docs, spark.createDataFrame([], "fp string")) \
-            .write.parquet(fp)
-        band = str(tmp_path / f"band_{tag}")
-        spark.createDataFrame(
-            [(d, d * 31 + b, b, (d + b) % 5, d % 2)
-             for d in range(10) for b in range(4)],
-            "doc_id long, minhash long, band int, bucket long, batch_id int",
-        ).write.partitionBy("batch_id").parquet(band)
-        ivf = str(tmp_path / f"ivf_{tag}")
-        emb = spark.range(10).select(
-            F.col("id").alias("vec_id"),
-            F.transform(
-                F.sequence(F.lit(0), F.lit(5)),
-                lambda j: (
-                    (F.pmod(F.xxhash64("id", j), F.lit(1001)) - F.lit(500))
-                    / F.lit(500.0)
-                ).cast("double"),
-            ).alias("embedding"),
-        )
-        ivf_store_init(emb, ivf, n_centroids=3)
-        return [
-            {"path": band, "kind": "band"},
-            {"path": fp, "kind": "fingerprint"},
-            {"path": ivf, "kind": "ivf"},
-        ]
+        return _three_store_manifest(spark, tmp_path, tag)
 
     victims = [2, 7]
-    seq = forget_ids(spark, build("s"), victims, parallelism=1).collect()
+    seq = [
+        r
+        for entry in build("s")
+        for r in forget_ids(spark, [entry], victims).collect()
+    ]
     par = forget_ids(spark, build("p"), victims).collect()
     # identical summaries, manifest order, modulo the per-build paths
     assert [(r.kind, r.rows_removed) for r in seq] == [
@@ -2060,3 +2071,23 @@ def test_forget_ids_parallel_matches_sequential(spark, tmp_path):
         .count()
         == 0
     )
+
+
+def test_forget_ids_legs_keep_callers_job_group(spark, tmp_path):
+    """Every job a concurrent sweep submits carries the caller's job
+    group, so profilers count it and cancelJobGroup can stop it: no job
+    without a group is submitted during the call."""
+    from arrowhouse_spark.operators.forget import forget_ids
+
+    manifest = _three_store_manifest(spark, tmp_path, "jg")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("forget-jg", "forget_ids job-group inheritance")
+    try:
+        summary = forget_ids(spark, manifest, [2, 7]).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    assert [r.kind for r in summary] == ["band", "fingerprint", "ivf"]
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+    assert tracker.getJobIdsForGroup("forget-jg")

@@ -139,6 +139,24 @@ def test_source_mixed_sample_deterministic_and_mix(spark):
     assert sorted((r.source, r.doc_id) for r in out2.collect()) == got1
 
 
+def test_source_mixed_sample_key_shared_across_sources(spark):
+    """Winners attach back by (key, source): a key that wins in one source
+    must not admit its row in another, so each source returns exactly
+    take_n rows even when every key appears in both sources."""
+    from arrowhouse_spark.operators.sampling import source_mixed_sample
+
+    df = spark.createDataFrame(
+        [(i, s) for i in range(40) for s in ("a", "b")],
+        "doc_id: long, source: string",
+    )
+    # n = {a:40, b:40}; weights 3/1 → m = 13 → take a:39, b:13
+    out = source_mixed_sample(df, {"a": 3, "b": 1}, key="doc_id")
+    counts = {
+        r.source: r["count"] for r in out.groupBy("source").count().collect()
+    }
+    assert counts == {"a": 39, "b": 13}
+
+
 def test_source_mixing_rejects_bad_weights(spark):
     import pytest
 
