@@ -52,6 +52,23 @@ def _fs_dir_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(p))
 
 
+def _read_twin(spark: SparkSession, twin_path: str) -> DataFrame | None:
+    """The ``__bycomp`` twin, or None when it is absent. A directory with
+    no readable layout (a crashed write left only ``_temporary``) counts
+    as absent; any other read failure raises. FS existence gate instead
+    of a probe read: a missing path would log a stack-trace WARN."""
+    from arrowhouse_spark.operators.similarity import _is_missing_store_error
+
+    if not _fs_dir_exists(spark, twin_path):
+        return None
+    try:
+        return spark.read.parquet(twin_path)
+    except Exception as exc:  # noqa: BLE001 — classify, re-raise the rest
+        if _is_missing_store_error(exc):
+            return None
+        raise
+
+
 def _fs_read_small(spark: SparkSession, path: str) -> bytes | None:
     """Read a small (metadata-sized) file through the Hadoop FS API; None
     if absent. The payload crosses py4j ONCE (a byte[] returned from a
@@ -442,22 +459,10 @@ def components_incremental(
                     "keep passing comp_index=True for its whole lifecycle "
                     "(or delete the twin directory to drop the index)"
                 )
-        # FS existence gate instead of a probe read (same WARN-noise and
-        # per-fold head(1) job rationale as the store probe above);
-        # a missing twin = adopting a twin-less store — full-scan this
-        # fold and the write below builds the twin. A twin directory that
-        # exists but holds no readable layout (a crashed write left only
-        # _temporary) is absent too: the rebuild's overwrite replaces it.
-        if comp_index and _fs_dir_exists(spark, twin_path):
-            from arrowhouse_spark.operators.similarity import (
-                _is_missing_store_error,
-            )
-
-            try:
-                twin = spark.read.parquet(twin_path)
-            except Exception as exc:  # noqa: BLE001 — classify, re-raise
-                if not _is_missing_store_error(exc):
-                    raise
+        # a missing or unreadable twin = adopting a twin-less store —
+        # full-scan this fold and the write below (re)builds the twin
+        if comp_index:
+            twin = _read_twin(spark, twin_path)
         if twin is not None:
             cbuckets = [
                 r.ccb
@@ -676,8 +681,11 @@ def components_store_retract_counted(
         return empty, 0  # none of the ids are in the store
     acomps_j = gate_broadcast(acomps, n_rows=n_acomps)
 
-    has_twin = _fs_dir_exists(spark, twin_path)
-    if has_twin:
+    # an unreadable twin counts as absent, as in the comp_index fold:
+    # members come from the store scan, the twin rewrite below is
+    # skipped, and the next comp_index=True fold rebuilds the twin
+    twin = _read_twin(spark, twin_path)
+    if twin is not None:
         cbuckets = [
             r.ccb
             for r in acomps.select(
@@ -686,9 +694,7 @@ def components_store_retract_counted(
             .distinct()
             .collect()
         ]
-        members_src = spark.read.parquet(twin_path).filter(
-            F.col("ccb").isin(cbuckets)
-        )
+        members_src = twin.filter(F.col("ccb").isin(cbuckets))
     else:
         members_src = store
     members = (
@@ -714,12 +720,14 @@ def components_store_retract_counted(
         gone.unionByName(delta.select("id")).distinct().localCheckpoint()
     )
     touch_ids_j = gate_broadcast(touch_ids)
-    tb = (
-        touch_ids.select(hash_bucket("id", n_buckets, salt="cc").alias("cb"))
+    tvals = [
+        r.cb
+        for r in touch_ids.select(
+            hash_bucket("id", n_buckets, salt="cc").alias("cb")
+        )
         .distinct()
-        .localCheckpoint()
-    )
-    tvals = [r.cb for r in tb.collect()]
+        .collect()
+    ]
     carry = (
         store.filter(F.col("cb").isin(tvals))
         .join(touch_ids_j, "id", "left_anti")
@@ -760,7 +768,7 @@ def components_store_retract_counted(
             tfs.delete(tp, True)
         return delta.select("id", "component"), n_removed
 
-    if has_twin:
+    if twin is not None:
         ccb = hash_bucket("component", n_buckets, salt="ccb").alias("ccb")
         # touched ccb = every affected component's OLD bucket ∪ the delta
         # rows' NEW buckets (labels move buckets when the root retires)
@@ -769,8 +777,7 @@ def components_store_retract_counted(
         )
         tcvals = [r.ccb for r in tccb.collect()]
         tcarry = (
-            spark.read.parquet(twin_path)
-            .filter(F.col("ccb").isin(tcvals))
+            twin.filter(F.col("ccb").isin(tcvals))
             .join(touch_ids_j, "id", "left_anti")
             .select("id", "component", "ccb")
         )

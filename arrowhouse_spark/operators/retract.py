@@ -1,10 +1,11 @@
 """Shared machinery for id-keyed retraction over partition-pruned stores.
 
 Three persistent stores retract by the IDENTICAL sequence — locate the
-retracted ids' rows with a semi-join grouped by the store's partition
-column, rewrite ONLY the touched partitions minus those rows (dynamic
-overwrite), drop fully-drained partition directories via the Hadoop FS
-API, and remove the store directory on a full drain — differing only in
+retracted ids' rows with one left join grouped by the store's partition
+column (hits and row total per partition), rewrite ONLY the touched,
+not-drained partitions minus those rows (dynamic overwrite), drop
+fully-drained partition directories via the Hadoop FS API, and remove
+the store directory on a full drain — differing only in
 the partition column (band stores: ``batch_id``; SCD2 history: ``kb``;
 training shards: ``shard``). This module holds that sequence ONCE so a
 fix to the broadcast gate or the drained-dir logic lands everywhere
@@ -61,41 +62,48 @@ def partitioned_store_retract(
         if _is_missing_store_error(exc):
             return 0
         raise
-    ids_j = gate_broadcast(ids)
+    ids_j = gate_broadcast(ids.withColumn("__hit", F.lit(True)))
+    # one locate pass: per partition, its row total and its retracted
+    # rows; a partition is drained when every row is a hit
     hit = (
-        store.join(ids_j, id_col, "semi")
+        store.select(id_col, part_col)
+        .join(ids_j, id_col, "left")
         .groupBy(part_col)
-        .agg(F.count(F.lit(1)).alias("__n"))
+        .agg(
+            F.count(F.lit(1)).alias("__rows"),
+            F.count("__hit").alias("__n"),
+        )
+        .filter(F.col("__n") > 0)
         .collect()
     )
     if not hit:
         return 0
     touched = [r[part_col] for r in hit]
+    drained = [r[part_col] for r in hit if r["__n"] == r["__rows"]]
     removed = int(sum(r["__n"] for r in hit))
-    keep = (
-        store.filter(F.col(part_col).isin(touched))
-        .join(ids_j, id_col, "left_anti")
-        .localCheckpoint()  # self-read-overwrite discipline
-    )
-    writer = (
-        keep.repartition(len(touched), part_col)
-        if repartition_by_count
-        else keep.repartition(part_col)
-    )
-    if sort_col is not None:
-        writer = writer.sortWithinPartitions(sort_col)
-    (
-        writer.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(part_col)
-        .parquet(store_path)
-    )
-    kept = {r[part_col] for r in keep.select(part_col).distinct().collect()}
-    for v in touched:
-        if v not in kept:
-            fs, p = _hadoop_fs(spark, f"{store_path}/{part_col}={v}")
-            if fs.exists(p):
-                fs.delete(p, True)
+    if len(drained) < len(touched):
+        keep = (
+            store.filter(F.col(part_col).isin(touched))
+            .join(ids_j, id_col, "left_anti")
+            .localCheckpoint()  # self-read-overwrite discipline
+        )
+        writer = (
+            keep.repartition(len(touched), part_col)
+            if repartition_by_count
+            else keep.repartition(part_col)
+        )
+        if sort_col is not None:
+            writer = writer.sortWithinPartitions(sort_col)
+        (
+            writer.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(part_col)
+            .parquet(store_path)
+        )
+    for v in drained:
+        fs, p = _hadoop_fs(spark, f"{store_path}/{part_col}={v}")
+        if fs.exists(p):
+            fs.delete(p, True)
     # full drain: no partition dirs left — remove the store directory so
     # the layout is not an unreadable shell
     fs, sdir = _hadoop_fs(spark, store_path)

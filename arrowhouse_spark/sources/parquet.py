@@ -16,6 +16,7 @@ import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TPCH_TABLES = (
     "region",
@@ -30,16 +31,33 @@ TPCH_TABLES = (
     "embeddings",
 )
 
+# (applicationId, path) -> the schema Spark inferred on the path's first read
+_SCHEMAS: dict[tuple[str, str], StructType] = {}
+
 
 def read_parquet(
     spark: SparkSession,
     path: str,
     columns: Sequence[str] | None = None,
 ) -> DataFrame:
-    """Read parquet; ``columns`` ≡ the reference's column-index pruning
-    (explicit ``select`` guarantees ReadSchema is pruned even with no
-    downstream projection)."""
-    df = spark.read.parquet(path)
+    """Read an input table; ``columns`` ≡ the reference's column-index
+    pruning (explicit ``select`` guarantees ReadSchema is pruned even with
+    no downstream projection).
+
+    Cost: one schema-inference job per path per SparkContext. A
+    schema-less ``spark.read.parquet`` runs a one-task job to open a
+    footer on every call; here only a path's first read does, and it
+    stores the inferred schema. Every read, the first included, then
+    passes that schema to ``spark.read.schema(...)``, which submits no
+    job and gives fresh attribute ids, so self-joins work.
+    Contract: the table at ``path`` is immutable for the life of the
+    SparkContext, as Spark assumes for catalog tables until ``REFRESH``.
+    Stores rewritten in place must not be read through here."""
+    key = (spark.sparkContext.applicationId, path)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    df = spark.read.schema(schema).parquet(path)
     if columns is not None:
         df = df.select(*columns)
     return df
@@ -53,6 +71,6 @@ def load_tables(
     for t in tables:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
-            out[t] = spark.read.parquet(p)
+            out[t] = read_parquet(spark, p)
     return out
 

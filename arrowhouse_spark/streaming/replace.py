@@ -1355,7 +1355,6 @@ def band_store_retract(
         _is_missing_store_error,
     )
 
-    ids = normalize_ids(spark, ids, id_col)
     try:
         store = spark.read.parquet(store_path)
         store.schema
@@ -1365,7 +1364,7 @@ def band_store_retract(
         raise
     if "batch_id" not in store.columns:
         # legacy unpartitioned layout: no pruning axis — rewrite whole
-        ids_j = gate_broadcast(ids)
+        ids_j = gate_broadcast(normalize_ids(spark, ids, id_col))
         hitn = store.join(ids_j, id_col, "semi").count()
         if hitn == 0:
             return 0

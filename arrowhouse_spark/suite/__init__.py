@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from arrowhouse_spark.session import shuffle_parts
+from arrowhouse_spark.sources.parquet import read_parquet
 
 from arrowhouse_spark.compile import apply_program
 from arrowhouse_spark.functions import hashing
@@ -166,7 +167,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:
             pass  # static conf on some Spark builds; the read may still work
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -261,6 +261,46 @@ def test_components_incremental_rebuilds_unreadable_twin(spark, tmp_path):
     assert not (twin / "_temporary").exists()
 
 
+def test_components_store_retract_skips_unreadable_twin(spark, tmp_path):
+    """A retract against a store whose __bycomp twin holds only _temporary
+    treats the twin as absent: it takes members from the store scan,
+    removes the rows and skips the twin rewrite. The next comp_index=True
+    fold rebuilds a twin row-identical to the primary store."""
+    import shutil
+
+    from arrowhouse_spark.operators.components import (
+        components_incremental,
+        components_store_retract_counted,
+    )
+
+    store = str(tmp_path / "ccr")
+    twin = tmp_path / "ccr__bycomp"
+    ET = "src long, dst long"
+    components_incremental(
+        spark.createDataFrame([(1, 2), (10, 11)], ET), store, comp_index=True
+    )
+    shutil.rmtree(twin)
+    (twin / "_temporary" / "0").mkdir(parents=True)
+
+    def rows(path):
+        return {
+            (r.id, r.component)
+            for r in spark.read.parquet(path).select("id", "component").collect()
+        }
+
+    delta, removed = components_store_retract_counted(spark, store, [1])
+    assert removed == 1
+    assert {(r.id, r.component) for r in delta.collect()} == {(2, 2)}
+    assert rows(store) == {(2, 2), (10, 10), (11, 10)}
+
+    components_incremental(
+        spark.createDataFrame([(2, 3)], ET), store, comp_index=True
+    )
+    assert rows(store) == {(2, 2), (3, 2), (10, 10), (11, 10)}
+    assert rows(str(twin)) == rows(store)
+    assert not (twin / "_temporary").exists()
+
+
 def test_components_incremental_n_buckets_pinned(spark, tmp_path):
     """A fold with a different n_buckets than the store was built with
     would prune the wrong partitions and silently mislabel — the meta
